@@ -4,10 +4,15 @@
 entire bootstrap sweep for each pair as vectorised numpy inside one task
 (the :mod:`ccm_spark.oracle` kernel — the same code the unit tests trust).
 Identical results to the pure-DataFrame plan (same seeded LCG sampling),
-but the kNN inner loop becomes BLAS-backed matrix arithmetic instead of a
-shuffle join, which wins by a wide margin when each series is small
-(thousands of points) and pairs are many — the expected 100 TB regime is
-millions of pairs scaling linearly across executors with ONE shuffle total.
+but the kNN inner loop becomes an in-memory index instead of a shuffle
+join: broadcast numpy distances computed once per direction; per
+bootstrap sample, a short scan of each query's row in a row order sorted
+once per direction (large libraries) or a sort of each query's few
+library distances (small ones) (``oracle.knn_index`` /
+``oracle.cross_map_lib_batch``). That wins by a wide margin when each
+series is small (thousands of points) and pairs are many — the expected
+100 TB regime is millions of pairs scaling linearly across executors
+with ONE shuffle total.
 
 The pure-DataFrame plan (plans/cross_map.py) remains the default: it is
 the oracle-matching reference path and the right choice when a single

@@ -75,8 +75,8 @@ def block_cross_map(
         from ccm_spark import oracle as _o
 
         bemb, btgt = bc.value
-        dist = (
-            _o._pairwise_distances(bemb)
+        index = (
+            _o.knn_index(bemb, radius)
             if 0 < bemb.shape[0] <= _o.PRECOMPUTE_DIST_MAX_P
             else None
         )
@@ -84,10 +84,9 @@ def block_cross_map(
             rows = []
             for lib in pdf["lib_size"]:
                 lib = int(lib)
-                if dist is not None:
+                if index is not None:
                     corrs = _o.cross_map_lib_batch(
-                        bemb, btgt, lib, num_samples, 0, seed, eff_dim, dist,
-                        exclusion_radius=radius,
+                        index, btgt, lib, num_samples, 0, seed, eff_dim
                     )
                 else:
                     # P > PRECOMPUTE_DIST_MAX_P: the (P x P) matrix would
@@ -260,9 +259,8 @@ def multispatial_ccm(
         bemb = pdf[e_cols].to_numpy(dtype=np.float64)
         btgt = pdf["tgt"].to_numpy(dtype=np.float64)
         if 0 < bemb.shape[0] <= _o.PRECOMPUTE_DIST_MAX_P:
-            dist = _o._pairwise_distances(bemb)
             corrs = _o.cross_map_lib_batch(
-                bemb, btgt, lib, num_samples, dir_id, seed, emb_dim, dist
+                _o.knn_index(bemb), btgt, lib, num_samples, dir_id, seed, emb_dim
             )
         else:
             corrs = [

@@ -11,9 +11,13 @@ numpy oracle).
 
 Scale notes:
   - The join key (pair_id, dir_id, lib_size, sample_id) bounds each group's
-    cross product at (P-L) x L; a sort-merge join over those keys scales to
-    arbitrarily many groups and AQE splits stragglers. No group ever exceeds
-    a single series' footprint, so no executor OOM at 1000x pairs.
+    cross product at (P-L) x L. The join is a shuffled-hash join (the
+    ``shuffle_hash`` hint on the library half, which builds the per-task
+    hash table), so neither join input is sorted. It scales to arbitrarily
+    many groups, and no group ever exceeds a single series' footprint.
+    Caveats: the library half is the larger side once lib_size > P/2, and
+    a hash build table cannot spill, so one task must hold its partition's
+    library rows in memory.
   - The distance is an unrolled fixed-order codegen expression (no UDF, no
     array allocation in the hot loop).
   - Exact kNN is the oracle-matching default and the right plan when a
@@ -84,8 +88,8 @@ def knn_candidates(
     # so the per-partition build table is always safe, and SHJ drops
     # BOTH join-input sorts (at scale: O(n log n) + spill per side).
     # Same rows, same partitioning (the top-k window keeps sharing the
-    # join's exchange); the build side is the library half, the
-    # smaller side at the large lib_sizes that dominate the sweep.
+    # join's exchange); the build side is the library half (L rows per
+    # group, the larger side once lib_size > P/2; see the scale notes).
     joined = preds.join(libs.hint("shuffle_hash"), GROUP_KEYS)
     if exclusion_radius > 0:
         joined = joined.where(

@@ -104,17 +104,86 @@ def library_split(
     return np.sort(order[:lib_size]), np.sort(order[lib_size:])
 
 
-#: precompute the full P x P distance matrix once per direction when the
-#: series is at most this long (memory: MAX^2 * 8 bytes = 128 MB at 4000).
-#: Bootstrap samples then reduce to submatrix selection — the distance
-#: arithmetic, the dominant cost, runs once instead of once per
-#: (lib_size, sample). Longer series fall back to per-sample distances.
+#: build the kNN index (:func:`knn_index`) once per direction when the
+#: series is at most this long. At 4000 it holds 128 MB of float64
+#: distances, plus 64 MB of int32 row order once a dense library has
+#: sorted it (192 MB); computing the distances passes through two
+#: (P, P, E) float64 temporaries (128 MB per embedding dimension each).
+#: Bootstrap samples then reduce to index lookups — the distance
+#: arithmetic and the row sort run once instead of once per
+#: (lib_size, sample). Longer series fall back to per-sample distances
+#: (:func:`cross_map_sample`).
 PRECOMPUTE_DIST_MAX_P = 4000
+
+#: rows per block while building the index: bounds the mask and int64
+#: argsort temporaries at _SORT_BLOCK x P entries
+_SORT_BLOCK = 256
+
+#: entries of the (samples x queries x columns) K1 block per kernel
+#: chunk: bounds its temporaries for long series and many samples
+_SCAN_ENTRIES = 1 << 23
 
 
 def _pairwise_distances(emb: np.ndarray) -> np.ndarray:
     diff = emb[:, None, :] - emb[None, :, :]
     return np.sqrt((diff * diff).sum(axis=2))
+
+
+class KnnIndex:
+    """Exact kNN index of one direction's embedding (P points).
+
+    ``dist`` is the (P, P) distance matrix with Theiler-masked pairs at
+    +inf (``exclusion_radius`` is the window). ``order[q]`` (int32) lists
+    all P points sorted by (``dist[q]``, index), so the first k library
+    members along it are exactly the k nearest, ties by ascending index.
+    ``order`` is built on first use: only dense libraries scan it.
+    """
+
+    def __init__(self, dist: np.ndarray, exclusion_radius: int):
+        self.dist = dist
+        self.exclusion_radius = exclusion_radius
+        self._order: np.ndarray | None = None
+
+    @property
+    def has_order(self) -> bool:
+        return self._order is not None
+
+    @property
+    def order(self) -> np.ndarray:
+        if self._order is None:
+            p = self.dist.shape[0]
+            self._order = np.empty((p, p), dtype=np.int32)
+            for a in range(0, p, _SORT_BLOCK):
+                self._order[a : a + _SORT_BLOCK] = np.argsort(
+                    self.dist[a : a + _SORT_BLOCK], axis=1, kind="stable"
+                )
+        return self._order
+
+
+def knn_index(emb: np.ndarray, exclusion_radius: int = 0) -> KnnIndex:
+    """Build the index once per direction: the distances, with the Theiler
+    mask (points within ``exclusion_radius`` steps of the query at +inf)
+    applied in place, block by block."""
+    dist = _pairwise_distances(emb)
+    if exclusion_radius > 0:
+        p = dist.shape[0]
+        cols = np.arange(p)
+        for a in range(0, p, _SORT_BLOCK):
+            near = np.abs(cols[a : a + _SORT_BLOCK, None] - cols[None, :])
+            dist[a : a + _SORT_BLOCK][near <= exclusion_radius] = np.inf
+    return KnnIndex(dist, exclusion_radius)
+
+
+def _simplex_weights(nd: np.ndarray, exclusion_radius: int) -> np.ndarray:
+    """W1 over the last axis of the k nearest distances. Under a Theiler
+    window, +inf (masked) neighbours weigh 0; an all-masked row divides
+    inf by inf, and that NaN is overwritten, so the warning is muted."""
+    min_d = nd.min(axis=-1, keepdims=True)
+    with np.errstate(invalid="ignore"):
+        w = np.where(nd < 1e-12, 1.0, np.exp(-nd / (min_d + 1e-8)))
+    if exclusion_radius > 0:
+        w = np.where(np.isinf(nd), 0.0, w)
+    return w
 
 
 def cross_map_sample(
@@ -158,13 +227,7 @@ def cross_map_sample(
     # K1: k smallest per query, ties by ascending library position
     nn = np.argsort(d, axis=1, kind="stable")[:, :k]  # (Q, k)
     nd = np.take_along_axis(d, nn, axis=1)
-    # W1
-    min_d = nd.min(axis=1, keepdims=True)
-    w = np.where(nd < 1e-12, 1.0, np.exp(-nd / (min_d + 1e-8)))
-    if exclusion_radius > 0:
-        # masked neighbours contribute nothing; an all-inf row would
-        # otherwise produce exp(-inf/inf) = nan
-        w = np.where(np.isinf(nd), 0.0, w)
+    w = _simplex_weights(nd, exclusion_radius)  # W1
     # P1
     neighbor_targets = tgt[lib_idx[nn]]
     wsum = w.sum(axis=1)
@@ -173,58 +236,114 @@ def cross_map_sample(
     return pearson(actual, predicted)
 
 
+def _scan_width(k: int, p: int, lib_size: int) -> int:
+    """First scan window: a query meets a library member about every P/L
+    columns, so 3kP/L + k columns hold k hits in nearly every row."""
+    return min(p, 3 * k * p // lib_size + k)
+
+
+def _k1_entries(
+    p: int, lib_size: int, num_samples: int, embedding_dim: int
+) -> tuple[int, int]:
+    """Entries K1 reads for one rung: by library sort (S x Q x L) and by
+    index scan (S x Q x the first window)."""
+    k = min(embedding_dim + 1, lib_size)
+    rows = num_samples * (p - lib_size)
+    return rows * lib_size, rows * _scan_width(k, p, lib_size)
+
+
+def _first_library_hits(
+    index: KnnIndex, in_lib: np.ndarray, pred_idx: np.ndarray, k: int, width: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """K1 by scan, for a dense library: the first k library members along
+    each query's index row, in (distance, index) order. Scans the first
+    ``width`` columns and doubles the window while any row has fewer than
+    k hits; the full row holds all L >= k library members. Returns the
+    (S, Q, k) global indices and their distances."""
+    s_n, p = in_lib.shape
+    flat_offset = (np.arange(s_n) * p)[:, None, None]
+    while True:
+        cand = index.order[pred_idx, :width]  # (S, Q, width)
+        hit = in_lib.ravel()[cand + flat_offset]
+        seen = np.cumsum(hit, axis=2, dtype=np.int32)
+        if width == p or (seen[:, :, -1] >= k).all():
+            break
+        width = min(2 * width, p)
+    hit &= seen <= k
+    nn = cand[hit].reshape(*pred_idx.shape, k)
+    return nn, index.dist[pred_idx[:, :, None], nn]
+
+
+def _nearest_in_library(
+    index: KnnIndex, lib_idx: np.ndarray, pred_idx: np.ndarray, k: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """K1 by sort, for a sparse library: a stable argsort of each query's
+    L library distances. ``lib_idx`` rows are ascending, so ties break by
+    index. Returns the (S, Q, k) global indices and their distances."""
+    d = index.dist[pred_idx[:, :, None], lib_idx[:, None, :]]  # (S, Q, L)
+    nn = np.argsort(d, axis=2, kind="stable")[:, :, :k]
+    rows = np.arange(len(lib_idx))[:, None, None]
+    return lib_idx[rows, nn], np.take_along_axis(d, nn, axis=2)
+
+
 def cross_map_lib_batch(
-    emb: np.ndarray,
+    index: KnnIndex,
     tgt: np.ndarray,
     lib_size: int,
     num_samples: int,
     dir_id: int,
     seed: int,
     embedding_dim: int,
-    dist_matrix: np.ndarray,
-    exclusion_radius: int = 0,
 ) -> np.ndarray:
     """All bootstrap samples of one lib_size in a single vectorised pass.
 
-    Identical arithmetic to :func:`cross_map_sample` (same expressions, same
-    dtypes, same stable-sort tie-breaks, same Theiler-window masking),
-    batched over the sample axis —
-    this removes the per-sample Python loop that dominated the fleet path.
-    Requires the precomputed distance matrix (all samples share it; the
-    P > PRECOMPUTE_DIST_MAX_P regime keeps the per-sample loop).
+    Same result bits as :func:`cross_map_sample` on the same series: the
+    same library split, the same k nearest library points in
+    (distance, index) order (distance ties break by ascending global
+    index, Theiler-masked points sit at +inf), and the same weight,
+    prediction and Pearson expressions and dtypes, batched over the
+    sample axis. The neighbours come from the per-direction
+    :class:`KnnIndex`, in the form that reads fewer entries: a dense
+    library by a short scan of each query's sorted index row (the first
+    scan sorts the index), a sparse one by a stable sort of each query's
+    L library distances. The P > PRECOMPUTE_DIST_MAX_P regime keeps the
+    per-sample loop.
     Returns the (num_samples,) skill vector, 0.0 on degenerate guards.
     """
-    p = emb.shape[0]
+    p = index.dist.shape[0]
     if lib_size >= p or (p - lib_size) < 2:
         return np.zeros(num_samples)
     idx = np.arange(p)
     samples = np.arange(num_samples)
     key = lcg_rank_key(idx[None, :], samples[:, None], lib_size, dir_id, seed)
-    # (key, idx) lexsort == stable argsort of key*P + idx (key < 2^31, so
-    # the combined value stays far below 2^63)
-    order = np.argsort(key * p + idx[None, :], axis=1, kind="stable")
-    lib_idx = np.sort(order[:, :lib_size], axis=1)  # (S, L)
-    pred_idx = np.sort(order[:, lib_size:], axis=1)  # (S, Q)
-    s_n, q_n, l_n = num_samples, pred_idx.shape[1], lib_size
-    d = dist_matrix[pred_idx[:, :, None], lib_idx[:, None, :]]  # (S, Q, L)
-    if exclusion_radius > 0:
-        d = np.where(
-            np.abs(pred_idx[:, :, None] - lib_idx[:, None, :])
-            <= exclusion_radius,
-            np.inf,
-            d,
-        )
+    # (key, idx) lexsort == argsort of key*P + idx: the combined values are
+    # distinct (key < 2^31, so they stay far below 2^63), so any sort
+    # kind gives the same permutation
+    draw = np.argsort(key * p + idx[None, :], axis=1)
+    in_lib = np.zeros((num_samples, p), dtype=bool)
+    np.put_along_axis(in_lib, draw[:, :lib_size], True, axis=1)
+    q_n = p - lib_size
+    pred_idx = np.nonzero(~in_lib)[1].reshape(num_samples, q_n)  # (S, Q)
     k = min(embedding_dim + 1, lib_size)
-    nn = np.argsort(d, axis=2, kind="stable")[:, :, :k]  # K1, ties by lib pos
-    nd = np.take_along_axis(d, nn, axis=2)
-    min_d = nd.min(axis=2, keepdims=True)
-    w = np.where(nd < 1e-12, 1.0, np.exp(-nd / (min_d + 1e-8)))  # W1
-    if exclusion_radius > 0:
-        w = np.where(np.isinf(nd), 0.0, w)
-    global_nn = np.take_along_axis(
-        np.broadcast_to(lib_idx[:, None, :], (s_n, q_n, l_n)), nn, axis=2
-    )
-    neighbor_targets = tgt[global_nn]  # (S, Q, k)
+    width = _scan_width(k, p, lib_size)
+    # K1 sorts each query's L library distances (sparse library) or scans
+    # its sorted index row (dense), whichever reads fewer entries; the
+    # first scan also pays P x P for sorting the index
+    sort_n, scan_n = _k1_entries(p, lib_size, num_samples, embedding_dim)
+    sparse = sort_n < scan_n + (0 if index.has_order else p * p)
+    if sparse:
+        lib_idx = np.nonzero(in_lib)[1].reshape(num_samples, lib_size)
+    step = max(1, _SCAN_ENTRIES // (q_n * min(lib_size, width)))
+    parts = [
+        _nearest_in_library(index, lib_idx[c], pred_idx[c], k)
+        if sparse
+        else _first_library_hits(index, in_lib[c], pred_idx[c], k, width)
+        for c in (slice(s, s + step) for s in range(0, num_samples, step))
+    ]
+    nn = np.concatenate([n for n, _ in parts])  # (S, Q, k) global indices
+    nd = np.concatenate([d for _, d in parts])
+    w = _simplex_weights(nd, index.exclusion_radius)  # W1
+    neighbor_targets = tgt[nn]  # (S, Q, k)
     wsum = w.sum(axis=2)
     predicted = np.where(  # P1
         wsum == 0,
@@ -258,16 +377,27 @@ def cross_map(
     emb = time_delay_embedding(source, config.embedding_dim, config.tau)
     tgt = adjusted_target(target, config.embedding_dim, config.tau)
     lib_sizes = config.resolved_lib_sizes(len(x))
-    dist_matrix = (
-        _pairwise_distances(emb) if 0 < emb.shape[0] <= PRECOMPUTE_DIST_MAX_P else None
-    )
-    results = []
     radius = config.exclusion_radius
+    index = (
+        knn_index(emb, radius) if 0 < emb.shape[0] <= PRECOMPUTE_DIST_MAX_P else None
+    )
+    if index is not None:
+        # one index sort serves every rung: pay for it up front when the
+        # rungs' scans save more entries than it costs
+        p, s_n = emb.shape[0], config.num_samples
+        rungs = [
+            _k1_entries(p, lib, s_n, config.embedding_dim)
+            for lib in lib_sizes
+            if 0 < lib <= p - 2
+        ]
+        if p * p + sum(map(min, rungs)) < sum(sort_n for sort_n, _ in rungs):
+            index.order  # the first read sorts the rows
+    results = []
     for lib_size in lib_sizes:
-        if dist_matrix is not None:
+        if index is not None:
             corrs = cross_map_lib_batch(
-                emb, tgt, lib_size, config.num_samples, dir_id, config.seed,
-                config.embedding_dim, dist_matrix, exclusion_radius=radius,
+                index, tgt, lib_size, config.num_samples, dir_id, config.seed,
+                config.embedding_dim,
             )
         else:
             corrs = [

@@ -315,55 +315,6 @@ SELECT pair_id, CAST(unnest(ladder) AS INT) AS lib_size FROM ladders"""
     )
 
 
-def sql_ccm_sampling(p: CCMQueryParams = PARAMS, lib_size: int = 80, max_samples: int = 3) -> str:
-    return (
-        ccm_pipeline_prefix(p, "fanned")
-        + f"""
-SELECT dir_id, sample_id, p, CAST(rnk AS INT) AS rnk,
-       rnk <= lib_size AS is_lib
-FROM fanned WHERE lib_size = {lib_size} AND sample_id < {max_samples}"""
-    )
-
-
-def sql_ccm_knn(p: CCMQueryParams = PARAMS, lib_size: int = 80, sample_id: int = 0) -> str:
-    return (
-        ccm_pipeline_prefix(p, "knn")
-        + f"""
-SELECT dir_id, q_p, CAST(nn_rank AS INT) AS nn_rank, l_p, dist
-FROM nn WHERE lib_size = {lib_size} AND sample_id = {sample_id}"""
-    )
-
-
-def sql_ccm_correlation(p: CCMQueryParams = PARAMS) -> str:
-    return (
-        ccm_pipeline_prefix(p, "corr")
-        + f"""
-SELECT {DIRECTION_CASE} AS direction, lib_size, sample_id,
-       round(corr, 6) + 0.0 AS corr
-FROM corr"""
-    )
-
-
-def sql_ccm_skill(p: CCMQueryParams = PARAMS) -> str:
-    return (
-        ccm_pipeline_prefix(p, "skill")
-        + f"""
-SELECT {DIRECTION_CASE} AS direction, lib_size,
-       round(correlation, 6) + 0.0 AS correlation
-FROM skill"""
-    )
-
-
-def sql_ccm_convergence(p: CCMQueryParams = PARAMS) -> str:
-    return (
-        ccm_pipeline_prefix(p, "conv")
-        + f"""
-SELECT {DIRECTION_CASE} AS direction,
-       round(slope, 6) + 0.0 AS slope, convergent
-FROM conv"""
-    )
-
-
 def sql_ccm_bidirectional(p: CCMQueryParams = PARAMS) -> str:
     return (
         ccm_pipeline_prefix(p, "conv")

@@ -169,7 +169,7 @@ def test_exclusion_radius_batched_kernel_matches_per_sample():
     dm = oracle._pairwise_distances(emb)
     for radius in (1, 5, 20):
         batch = oracle.cross_map_lib_batch(
-            emb, tgt, 25, 6, 0, 11, 3, dm, exclusion_radius=radius
+            oracle.knn_index(emb, radius), tgt, 25, 6, 0, 11, 3
         )
         singles = [
             oracle.cross_map_sample(
@@ -179,6 +179,71 @@ def test_exclusion_radius_batched_kernel_matches_per_sample():
             for s in range(6)
         ]
         np.testing.assert_array_equal(batch, np.array(singles))
+
+
+def test_all_masked_theiler_rows_raise_no_warning():
+    """With a window wide enough to mask whole query rows, both kernels
+    return the same bits as before the W1 guard skipped the inf/inf
+    divide, and raise no RuntimeWarning on the way."""
+    import warnings
+
+    x, y = coupled_series(length=40, coupling=0.4, noise_level=0.02, seed=3)
+    x, y = np.asarray(x), np.asarray(y)
+    emb = oracle.time_delay_embedding(y, 2, 1)
+    tgt = oracle.adjusted_target(x, 2, 1)
+    want = {  # radius 25 on 40 points: rows 14..25 are fully masked
+        "x_causes_y": ["0x1.2c884d67f29bep-6", "-0x1.dccaa79b3dcf2p-5",
+                       "0x1.45fb0486321a0p-6", "-0x1.b0423a1e22730p-7"],
+        "y_causes_x": ["0x1.b341d5aa9edacp-5", "0x1.c79f6a55dd628p-4",
+                       "0x1.4115156b71958p-4", "0x1.ffb2a6550715dp-4"],
+        "sample": ["0x1.55b7105482edbp-3", "-0x1.6205b6bcf12bcp-5",
+                   "-0x1.c4a2c1f5d5071p-4", "-0x1.f7aee94599ee6p-3"],
+    }
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for radius in (25, 40):  # 40: every point of every row is masked
+            cfg = CCMConfig(
+                embedding_dim=2, tau=1, num_samples=4,
+                lib_sizes=[3, 10, 20, 30], seed=5, exclusion_radius=radius,
+            )
+            got = {
+                d: [float(c).hex() for _, c in r["results"]]
+                for d, r in oracle.bidirectional_ccm(x, y, cfg).items()
+            }
+            got["sample"] = [
+                float(oracle.cross_map_sample(
+                    emb, tgt, 10, s, 0, 5, 2, exclusion_radius=radius
+                )).hex()
+                for s in range(4)
+            ]
+            if radius == 25:
+                assert got == want
+            else:
+                assert got == {d: ["0x0.0p+0"] * 4 for d in want}
+
+
+def test_infinite_inputs_at_radius_zero_keep_nan_like_per_sample_kernel():
+    """Without a Theiler window, W1 leaves its NaN in place for a query
+    whose nearest distances are +inf (only +-inf inputs make one), as the
+    per-sample kernel and the Spark plan do. Both K1 forms agree."""
+    rng = np.random.default_rng(1)
+    x, y = rng.normal(size=40), rng.normal(size=40)
+    y[5::7] = np.inf
+    emb = oracle.time_delay_embedding(y, 2, 1)
+    tgt = oracle.adjusted_target(x, 2, 1)
+    with np.errstate(all="ignore"):
+        for lib_size in (3, 20, 30):
+            want = [
+                oracle.cross_map_sample(emb, tgt, lib_size, s, 0, 5, 2)
+                for s in range(4)
+            ]
+            for sort_first in (False, True):
+                index = oracle.knn_index(emb)
+                if sort_first:
+                    index.order
+                got = oracle.cross_map_lib_batch(index, tgt, lib_size, 4, 0, 5, 2)
+                np.testing.assert_array_equal(got, want)
+                assert np.isnan(got).all()
 
 
 def test_exclusion_radius_fastpath_and_api(spark):

@@ -279,10 +279,10 @@ def test_multispatial_detects_coupling_from_short_replicates(spark):
         embs.append(oracle.time_delay_embedding(np.asarray(y), cfg.embedding_dim, cfg.tau))
         tgts.append(oracle.adjusted_target(np.asarray(x), cfg.embedding_dim, cfg.tau))
     emb, tgt = np.vstack(embs), np.concatenate(tgts)
-    dist = oracle._pairwise_distances(emb)
+    index = oracle.knn_index(emb)
     for lib, skill in res["results"]:
         corrs = oracle.cross_map_lib_batch(
-            emb, tgt, lib, cfg.num_samples, 0, cfg.seed, cfg.embedding_dim, dist
+            index, tgt, lib, cfg.num_samples, 0, cfg.seed, cfg.embedding_dim
         )
         assert skill == float(np.sum(corrs) / cfg.num_samples)
     with pytest.raises(ValueError, match="max_points"):

@@ -2,15 +2,20 @@
 
 Covers the reference-parity invariants that must hold for ANY input:
 the C2 ladder rule (lib/ccm.ex:86-97), the LCG rank determinism/range, the
-R1/R3 guard semantics, and the sampling split partition property.
+R1/R3 guard semantics, the sampling split partition property, and the
+bit-equality of the batched index-then-scan kernel with the per-sample
+argsort kernel.
 """
 
 from __future__ import annotations
+
+from unittest import mock
 
 import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from ccm_spark import oracle
 from ccm_spark.config import generate_lib_sizes
 from ccm_spark.oracle import library_split, ols_slope, pearson
 from ccm_spark.rng import M31, lcg_rank_key
@@ -86,6 +91,132 @@ def test_slope_guards(ys):
     # zero x-variance: guard fires regardless of n
     slope0, conv0 = ols_slope(np.ones(5), np.arange(5.0))
     assert (slope0, conv0) == (0.0, False)
+
+
+def _series(kind: str, n: int, rng: np.random.Generator) -> np.ndarray:
+    if kind == "constant":
+        return np.full(n, 1.5)
+    if kind == "quantised":  # three levels: heavy distance ties
+        return rng.integers(0, 3, n).astype(np.float64)
+    return rng.normal(size=n)
+
+
+def _per_sample_replay(emb, tgt, lib_size, num_samples, dir_id, seed, dim, radius):
+    """The argsort reference form: per-sample distances, stable sort."""
+    return np.array([
+        oracle.cross_map_sample(
+            emb, tgt, lib_size, s, dir_id, seed, dim, exclusion_radius=radius
+        )
+        for s in range(num_samples)
+    ])
+
+
+@st.composite
+def _kernel_cases(draw):
+    dim = draw(st.integers(min_value=1, max_value=4))
+    tau = draw(st.integers(min_value=1, max_value=3))
+    p = draw(st.integers(min_value=dim + 3, max_value=60))
+    n = p + (dim - 1) * tau
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    kinds = st.sampled_from(["smooth", "quantised", "constant"])
+    src, tgt = _series(draw(kinds), n, rng), _series(draw(kinds), n, rng)
+    lib_size = draw(st.one_of(
+        st.just(dim + 1),  # lib_size == k
+        st.just(p - 2),
+        st.integers(min_value=1, max_value=p - 2),
+    ))
+    radius = draw(st.sampled_from([0, 1, p // 2 + 1, p]))  # p: all masked
+    return dict(
+        emb=oracle.time_delay_embedding(src, dim, tau),
+        tgt=oracle.adjusted_target(tgt, dim, tau),
+        lib_size=lib_size,
+        num_samples=draw(st.integers(min_value=1, max_value=6)),
+        dir_id=draw(st.integers(min_value=0, max_value=1)),
+        seed=draw(st.integers(min_value=0, max_value=2**31 - 1)),
+        dim=dim,
+        radius=radius,
+        # a sorted index makes every library with L >= the scan window
+        # take the scan; an unsorted one mostly takes the library sort
+        sorted_index=draw(st.booleans()),
+        # 1: one sample per kernel chunk, so the chunks are joined
+        scan_entries=draw(st.sampled_from([1, 64, oracle._SCAN_ENTRIES])),
+    )
+
+
+@given(_kernel_cases())
+@settings(max_examples=300, deadline=None)
+def test_batched_kernel_bit_equals_per_sample_argsort(c):
+    index = oracle.knn_index(c["emb"], c["radius"])
+    if c["sorted_index"]:
+        index.order
+    with mock.patch.object(oracle, "_SCAN_ENTRIES", c["scan_entries"]):
+        got = oracle.cross_map_lib_batch(
+            index, c["tgt"], c["lib_size"], c["num_samples"], c["dir_id"],
+            c["seed"], c["dim"],
+        )
+    want = _per_sample_replay(
+        c["emb"], c["tgt"], c["lib_size"], c["num_samples"], c["dir_id"],
+        c["seed"], c["dim"], c["radius"],
+    )
+    np.testing.assert_array_equal(got, want)
+
+
+def test_batched_kernel_k1_form_follows_cost():
+    """K1 scans the sorted index for a dense library and sorts the library
+    distances for a sparse one, or while the index order is unbuilt and
+    one rung cannot pay for it; every form is bit-equal to the replay."""
+    p, seed, dim = 60, 3, 2
+    rng = np.random.default_rng(9)
+    emb = rng.normal(size=(p, dim))
+    tgt = rng.normal(size=p)
+    forms = []
+    real = {"scan": oracle._first_library_hits, "sort": oracle._nearest_in_library}
+
+    def spy(form):
+        def call(*args):
+            forms.append(form)
+            return real[form](*args)
+        return call
+
+    with mock.patch.object(oracle, "_first_library_hits", spy("scan")), \
+            mock.patch.object(oracle, "_nearest_in_library", spy("sort")):
+        for lib_size, num_samples, sort_first, want_form in (
+            (50, 1, False, "sort"),  # 1 sample x 10 queries: sorting P x P costs more
+            (50, 1, True, "scan"),   # 50 library points >= a 13-column window
+            (5, 4, True, "sort"),    # 5 library points < a 60-column window
+            (50, 20, False, "scan"),  # 20 x 10 queries: the sort pays off
+        ):
+            index = oracle.knn_index(emb)
+            if sort_first:
+                index.order
+            forms.clear()
+            got = oracle.cross_map_lib_batch(
+                index, tgt, lib_size, num_samples, 0, seed, dim
+            )
+            assert set(forms) == {want_form}
+            want = _per_sample_replay(emb, tgt, lib_size, num_samples, 0, seed, dim, 0)
+            np.testing.assert_array_equal(got, want)
+
+
+def test_batched_kernel_widens_scan_window_repeatedly():
+    """Every library point lies far from every prediction point, so each
+    query's first (P - L) index columns hold no library hit and the scan
+    window has to double more than once; the result stays bit-equal."""
+    p, lib_size, seed, dim = 200, 100, 17, 1
+    k = dim + 1
+    lib, pred = library_split(p, lib_size, 0, 0, seed)
+    rng = np.random.default_rng(5)
+    src = rng.normal(size=p)
+    src[lib] += 1000.0
+    emb = oracle.time_delay_embedding(src, dim, 1)
+    tgt = rng.normal(size=p)
+    index = oracle.knn_index(emb)
+    in_lib = np.isin(index.order[pred], lib)  # sorts the index: K1 scans it
+    columns_needed = (np.cumsum(in_lib, axis=1) < k).sum(axis=1) + 1
+    assert columns_needed.max() > 2 * oracle._scan_width(k, p, lib_size)
+    got = oracle.cross_map_lib_batch(index, tgt, lib_size, 1, 0, seed, dim)
+    want = _per_sample_replay(emb, tgt, lib_size, 1, 0, seed, dim, 0)
+    np.testing.assert_array_equal(got, want)
 
 
 # --- cross-engine tokenizer parity (the hash-parity spine of text/dedup) ---
